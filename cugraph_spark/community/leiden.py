@@ -20,6 +20,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..components.connectivity import min_label_components
 from ..constants import SRC, DST, WEIGHT
 from ..plans import iterloop
 from ..structure.graph import Graph
@@ -36,20 +37,18 @@ def _split_disconnected(
     """Refinement: relabel each community to its connected components
     (labels become min member vertex of each connected piece).
 
-    Same hash-min + two-hop label shortcut as WCC (labels also propagate
-    label->min(member), squaring the radius per round — O(log d) rounds
-    instead of O(d); components/connectivity.py:114). ``n_hint`` is an
-    upper bound on the vertex count for the broadcast-hint decision.
+    Same min-label propagation as WCC
+    (components/connectivity.py:min_label_components), over the
+    intra-community edges: O(diameter) rounds. ``n_hint`` is an upper
+    bound on the vertex count for the broadcast-hint decision.
 
     When the level's edge list fits the driver tail
     (``n_level_edges <= LOCAL_TAIL_MAX_EDGES`` — the same size policy as
     the dendrogram tail), the intra-community edges are collected and
     split by union-find locally: one broadcast relabel join replaces the
-    O(log d) shuffle rounds. Coarsened levels shrink geometrically, so
+    O(diameter) shuffle rounds. Coarsened levels shrink geometrically, so
     at 100-TB scale only level 0 (and maybe 1) takes the distributed
     loop; small levels stop paying ~10 fixed-cost Spark jobs each."""
-    from ..components.connectivity import _skew_safe_hint
-
     hint = lambda df: iterloop.hint_state_join(df, n_hint)
     intra = (
         edges.join(hint(assign.select(F.col("vertex").alias(SRC), F.col("community").alias("_cs"))), SRC)
@@ -85,37 +84,9 @@ def _split_disconnected(
         return assign.join(F.broadcast(lab_df), "vertex", "left").select(
             "vertex", F.coalesce("_lab", F.col("vertex")).alias("community")
         )
-    labels = assign.select("vertex", F.col("vertex").alias("label"))
-    labels = iterloop.materialize(labels)
-    fs = iterloop.FusedSwap()  # swap + changed-count fused into one job
-    while True:
-        nbr = (
-            intra.join(hint(labels.select(F.col("vertex").alias(SRC), "label")), SRC)
-            .groupBy(F.col(DST).alias("vertex"))
-            .agg(F.min("label").alias("_n"))
-        )
-        prop = labels.join(hint(nbr), "vertex", "left").select(
-            "vertex",
-            F.least(F.col("label"), F.coalesce("_n", F.col("label"))).alias("label"),
-            F.col("label").alias("_o"),
-        )
-        # two-hop shortcut: label -> min vertex currently holding it
-        # (skew-safe hint: labels consolidate toward one value per piece)
-        lab_min = prop.groupBy(F.col("label").alias("_lab")).agg(
-            F.min("vertex").alias("_root")
-        )
-        upd = (
-            prop.join(_skew_safe_hint(lab_min, n_hint), prop["label"] == lab_min["_lab"], "left")
-            .select(
-                "vertex",
-                F.least(F.col("label"), F.coalesce("_root", F.col("label"))).alias("label"),
-                "_o",
-            )
-        )
-        upd, (ch,) = fs.swap(upd, [F.sum((F.col("label") != F.col("_o")).cast("long"))])
-        labels = upd.select("vertex", "label")
-        if not ch:
-            break
+    labels = min_label_components(
+        intra, assign.select("vertex", F.col("vertex").alias("label")), n_hint
+    )
     return labels.withColumnRenamed("label", "community")
 
 

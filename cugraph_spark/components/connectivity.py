@@ -6,14 +6,12 @@ Reference: /root/reference/python/cugraph/cugraph/components/connectivity.py:86
 
 Spark mapping (SURVEY §2.E):
 
-- WCC: hash-min label propagation with the *two-hop shortcut* from the
-  HashToMin / large-star-small-star family (Rastogi et al., "Finding
-  Connected Components in MapReduce", ICDE 2013 — public algorithm): each
-  round every vertex adopts the min label in its closed neighborhood, and
-  labels also propagate label->label, which squares the propagation radius
-  and converges in O(log d) rounds instead of O(d). Labels are the MIN
-  vertex id in the component — deterministic, unlike the reference's
-  arbitrary representative, and SQL-checkable.
+- WCC: hash-min label propagation (``min_label_components``, shared with
+  Leiden's refinement split and Borůvka's component merge): each round
+  every vertex adopts the min label in its closed neighborhood, so the
+  loop takes O(diameter) rounds. Labels are the MIN vertex id in the
+  component — deterministic, unlike the reference's arbitrary
+  representative, and SQL-checkable.
 
 - SCC: multi-pivot forward-backward *coloring* (Orzan 2004 / Slota et
   al. "BFS and Coloring-Based Parallel Algorithms for Strongly
@@ -35,8 +33,6 @@ Spark mapping (SURVEY §2.E):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, functions as F
 
 from ..constants import SRC, DST
@@ -45,49 +41,56 @@ from ..structure.graph import Graph
 from ..structure.symmetrize import add_reverse_edges
 
 
-# Broadcast cap for the per-round label->root map (16 bytes/row).
-# Distinct from iterloop.BROADCAST_STATE_MAX_ROWS because the label-keyed
-# join it protects is SKEWED (giant component): below the cap broadcast
-# is the skew-immune plan (scale-22, 2.4M labels, AQE-off small-plan
-# regime: 237s shuffle-melt -> 67s broadcast). Above it the driver-side
-# broadcast build becomes the serial bottleneck and the join falls back
-# to sort-merge with AQE skew splitting — which is exactly the regime
-# where small_plan leaves AQE ON (V above the state threshold). Measured
-# at scale-23 (4.61M labels): 206.5s broadcast vs 99.4s sort-merge+AQE.
-# The cap sits between the two measurements, aligned with the state
-# threshold.
-_LABELMAP_BROADCAST_MAX_ROWS = 3_000_000
+def _min_label_round(
+    edges: DataFrame, cur: DataFrame, n_hint: int | None, jk: str, gk: str
+) -> DataFrame:
+    """One hash-min pass: every vertex adopts the min label of its closed
+    neighborhood. Returns (vertex, label, _old)."""
+    nbr_min = (
+        edges.join(
+            iterloop.hint_state_join(cur.select(F.col("vertex").alias(jk), "label"), n_hint),
+            jk,
+        )
+        .groupBy(F.col(gk).alias("vertex"))
+        .agg(F.min("label").alias("_nbr"))
+    )
+    # nbr_min is V-bounded: broadcast it so the labels leaf is not
+    # re-shuffled+sorted for a sort-merge join every round
+    return cur.join(iterloop.hint_state_join(nbr_min, n_hint), "vertex", "left").select(
+        "vertex",
+        F.least(F.col("label"), F.coalesce("_nbr", F.col("label"))).alias("label"),
+        F.col("label").alias("_old"),
+    )
 
 
-#: Hash-min propagation passes fused into each wcc swap+convergence job;
-#: env-overridable (SPARK_GRAFT_WCC_PASSES) for A/B. Propagation is
-#: confluent min, so any k computes the identical fixpoint. Measured r7
-#: (sf0.1 cust-supp graph, interleaved min/median of 4): 32 cores k=1
-#: 2.04/2.39s, k=2 2.28/2.45s, k=3 2.21/2.53s; 8 cores k=1 2.33/2.78s,
-#: k=2 2.30/2.68s — all within this box's noise band. The per-pass fixed
-#: cost here is the THREE broadcast builds (state, nbr_min, lab_min),
-#: which batching cannot remove, not the driver sync — so the default
-#: stays 1 (extra passes past convergence also cost a full E-scan each
-#: at scale). The batching path stays for cluster A/Bs where the driver
-#: round-trip is hundreds of ms, not single-digit.
-WCC_PASSES_PER_SYNC = 1
+def min_label_components(
+    edges: DataFrame, labels: DataFrame, n_hint: int | None, jk: str = SRC, gk: str = DST
+) -> DataFrame:
+    """Fixpoint of min-label propagation over a symmetric ``(src, dst)``
+    edge set, starting from ``(vertex, label)``; returns ``(vertex,
+    label)``. Starting from label = vertex id this labels every vertex
+    with the min id of its connected component. Takes O(diameter) rounds.
 
-
-def _wcc_passes_per_sync() -> int:
-    try:
-        return max(1, int(os.environ.get("SPARK_GRAFT_WCC_PASSES", str(WCC_PASSES_PER_SYNC))))
-    except ValueError:
-        return WCC_PASSES_PER_SYNC
-
-
-def _skew_safe_hint(df: DataFrame, n_rows: int | None):
-    """Broadcast hint for label/color-keyed join sides: these keys
-    consolidate toward a handful of giant values (one per component), so
-    a shuffle join funnels most rows into one task — broadcast is the
-    skew-immune plan and keeps paying past the normal state threshold."""
-    if n_rows is not None and n_rows <= _LABELMAP_BROADCAST_MAX_ROWS:
-        return F.broadcast(df)
-    return df
+    ``jk``/``gk`` pick the endpoint the state joins on and the one the
+    message aggregates by; on a symmetric edge set either orientation
+    gives the same fixpoint (see iterloop.sym_aligned_agg). ``n_hint``
+    bounds the vertex count for the broadcast-hint decision. Callers own
+    the loop regime (iterloop.small_plan)."""
+    labels = iterloop.materialize(labels)
+    # Per-round state swap + convergence scalar fused into ONE job
+    # (iterloop.FusedSwap): the new label table is local-checkpointed
+    # lazily (plan becomes a leaf immediately) and the changed-labels agg
+    # is the action that materializes the blocks. Reliable-checkpoint
+    # mode keeps the eager two-job cadence inside swap().
+    fs = iterloop.FusedSwap()
+    while True:
+        new, (changes,) = fs.swap(
+            _min_label_round(edges, labels, n_hint, jk, gk),
+            [F.sum((F.col("label") != F.col("_old")).cast("long"))],
+        )
+        labels = new.select("vertex", "label")
+        if not changes:
+            return labels
 
 
 def _ensure_legacy_args(api_name: str, directed, connection, return_labels) -> None:
@@ -114,15 +117,6 @@ def weakly_connected_components(
         edges = add_reverse_edges(edges)
 
     labels = G.vertices_internal.select("vertex", F.col("vertex").alias("label"))
-    labels = iterloop.materialize(labels)
-    it = 0
-    # Per-round state swap + convergence scalar fused into ONE job
-    # (iterloop.FusedSwap): the new label table is local-checkpointed
-    # lazily (plan becomes a leaf immediately) and the changed-labels agg
-    # is the action that materializes the blocks — halves the per-round
-    # fixed job cost vs materialize()+collect_scalars(). Reliable-
-    # checkpoint mode keeps the eager two-job cadence inside swap().
-    fs = iterloop.FusedSwap()
     # Aligned-aggregation flip (iterloop.sym_aligned_agg): labels join on
     # DST, min-label aggregates by SRC inside the cached edge
     # partitioning — no per-round Exchange. Only fires for graphs whose
@@ -133,77 +127,8 @@ def weakly_connected_components(
         if iterloop.sym_aligned_agg(G, G.number_of_vertices())
         else (SRC, DST)
     )
-
-    def _prop_round(cur: DataFrame) -> DataFrame:
-        """One hash-min propagation pass: returns (vertex, label, _old)."""
-        # min label over closed neighborhood (vertex itself + in-neighbors)
-        nbr_min = (
-            edges.join(
-                iterloop.hint_state_join(
-                    cur.select(F.col("vertex").alias(jk), "label"),
-                    G.number_of_vertices(),
-                ),
-                jk,
-            )
-            .groupBy(F.col(gk).alias("vertex"))
-            .agg(F.min("label").alias("_nbr"))
-        )
-        # nbr_min is V-bounded: broadcast it so the labels leaf is
-        # not re-shuffled+sorted for a sort-merge join every round
-        prop = (
-            cur.join(
-                iterloop.hint_state_join(nbr_min, G.number_of_vertices()),
-                "vertex",
-                "left",
-            )
-            .select(
-                "vertex",
-                F.least(F.col("label"), F.coalesce("_nbr", F.col("label"))).alias("label"),
-                F.col("label").alias("_old"),
-            )
-        )
-        # two-hop shortcut: each vertex also adopts the min label currently
-        # pointing at its label (label -> min(labels that share it))
-        lab_min = prop.groupBy(F.col("label").alias("_lab")).agg(F.min("vertex").alias("_root"))
-        # This join is keyed on LABEL, and labels consolidate toward one
-        # giant-component value — a shuffle join funnels most of V into
-        # one reduce task (measured: scale-22 R-MAT wcc 237s vs 16s at
-        # scale-20 purely from this skew once V left the state-broadcast
-        # regime). lab_min itself is <= #distinct-labels rows and
-        # shrinks geometrically, and a broadcast hash join is
-        # skew-immune, so hint it with its own (higher) cap.
-        lab_min = _skew_safe_hint(lab_min, G.number_of_vertices())
-        return (
-            prop.join(lab_min, prop["label"] == lab_min["_lab"], "left")
-            .select(
-                "vertex",
-                F.least(F.col("label"), F.coalesce("_root", F.col("label"))).alias("label"),
-                "_old",
-            )
-        )
-
-    # WCC_PASSES_PER_SYNC hash-min passes per swap+convergence job (r6
-    # verdict #6, guide §2 fixed-cost): min-label propagation is
-    # confluent — extra passes never change the fixpoint — so batching k
-    # passes into one driver round is semantics-free. Intermediate pass
-    # states are leaf-swapped (defer) so each pass's blocks are computed
-    # once inside the single fused job and every consumer reads the
-    # blocks. The convergence check stays sound: the LAST pass changing
-    # nothing means its input was already the fixpoint.
-    k_passes = _wcc_passes_per_sync()
     with iterloop.small_plan(edges.sparkSession, G.number_of_vertices()):
-        while True:
-            it += 1
-            step = labels
-            for _ in range(k_passes - 1):
-                step = fs.defer(_prop_round(step).select("vertex", "label"))
-            new_labels, (changes,) = fs.swap(
-                _prop_round(step),
-                [F.sum((F.col("label") != F.col("_old")).cast("long"))],
-            )
-            labels = new_labels.select("vertex", "label")
-            if not changes:
-                break
+        labels = min_label_components(edges, labels, G.number_of_vertices(), jk, gk)
 
     out = labels.withColumnRenamed("label", "labels")
     out = G.unrenumber(out, "vertex")
@@ -259,9 +184,10 @@ def _max_coloring(
         new = (
             c.join(iterloop.hint_state_join(nbr, n_hint), "vertex", "left")
             .join(
-                # cid-keyed: color classes consolidate -> skewed key, see
-                # _skew_safe_hint (broadcast far past the state threshold)
-                _skew_safe_hint(jump, n_hint),
+                # cid-keyed: color classes consolidate toward a few giant
+                # values, so a shuffle join would funnel most rows into
+                # one task; the broadcast hash join is skew-immune
+                iterloop.hint_state_join(jump, n_hint),
                 F.col("cid") == F.col("_jv"),
                 "left",
             )

@@ -297,9 +297,9 @@ def persist(df: DataFrame) -> DataFrame:
 # broadcast vs 138s sort-merge, sssp 114s vs 49s (the driver-side
 # broadcast build of a 4.6M-row table per ITERATION is the serial
 # bottleneck), bfs unchanged (frontier-sized broadcasts), wcc mildly
-# pro-broadcast (172s vs 188s — its label-map join keeps its own skew
-# cap below). Threshold set between the measured-good 2.4M and
-# measured-bad 4.6M. Earlier A/B at 646k vertices showed dropping it to
+# pro-broadcast (172s vs 188s). Threshold set between the measured-good
+# 2.4M and measured-bad 4.6M; skew-keyed joins (SCC's pointer jump) use
+# the same cap. Earlier A/B at 646k vertices showed dropping it to
 # 200k costs 30-80%, i.e. broadcast wins throughout the small range.
 BROADCAST_STATE_MAX_ROWS = 3_000_000
 

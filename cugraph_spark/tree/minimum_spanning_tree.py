@@ -8,14 +8,17 @@ minimum outgoing edge (``groupBy(component).min(struct(w, least(src,dst),
 greatest(src,dst)))`` — the tie-break key must identify the UNDIRECTED
 edge so equal-weight picks cannot cycle), add to forest, merge
 components by propagating min labels over the chosen merge edges until
-stable (the merge graph has <= one edge per component, so this inner
-fixpoint is tiny). O(log V) outer rounds.
+stable (components/connectivity.py:min_label_components). Each component
+picks one edge, so the merge graph has at most one edge per component,
+but its trees can be long chains: the inner loop takes O(diameter of the
+merge forest) rounds. O(log V) outer rounds.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..components.connectivity import min_label_components
 from ..constants import SRC, DST, WEIGHT
 from ..plans import iterloop
 from ..structure.graph import Graph
@@ -98,44 +101,25 @@ def _boruvka(G: Graph, sign: float) -> DataFrame:
         chosen = new_edges if chosen is None else chosen.unionByName(new_edges).distinct()
         chosen = fs_outer.defer(chosen)
 
-        # merge components: min-label propagation over the merge pairs
-        merge = pick.select(F.col("_cs").alias("a"), F.col("_cd").alias("b"))
-        merge = merge.unionByName(merge.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        # merge components: min-label propagation over the symmetric
+        # merge pairs
+        merge = pick.select(F.col("_cs").alias(SRC), F.col("_cd").alias(DST))
+        merge = merge.unionByName(merge.select(F.col(DST).alias(SRC), F.col(SRC).alias(DST)))
         merge = fs_outer.defer(merge.distinct())
-        labels = merge.select(F.col("a").alias("node")).distinct().select(
-            "node", F.col("node").alias("lab")
+        labels = min_label_components(
+            merge,
+            merge.select(F.col(SRC).alias("vertex")).distinct().select(
+                "vertex", F.col("vertex").alias("label")
+            ),
+            n_v,
         )
-        labels = iterloop.materialize(labels)
-        fs = iterloop.FusedSwap()  # swap + changed-count fused into one job
-        while True:
-            nbr = (
-                merge.join(
-                    iterloop.hint_state_join(
-                        labels.select(F.col("node").alias("a"), "lab"), n_v
-                    ),
-                    "a",
-                )
-                .groupBy(F.col("b").alias("node"))
-                .agg(F.min("lab").alias("_n"))
-            )
-            upd = labels.join(
-                iterloop.hint_state_join(nbr, n_v), "node", "left"
-            ).select(
-                "node",
-                F.least(F.col("lab"), F.coalesce("_n", F.col("lab"))).alias("lab"),
-                F.col("lab").alias("_o"),
-            )
-            upd, (ch,) = fs.swap(upd, [F.sum((F.col("lab") != F.col("_o")).cast("long"))])
-            labels = upd.select("node", "lab")
-            if not ch:
-                break
         comp = fs_outer.defer(
             comp.join(
-                iterloop.hint_state_join(labels.withColumnRenamed("node", "comp"), n_v),
+                iterloop.hint_state_join(labels.withColumnRenamed("vertex", "comp"), n_v),
                 "comp",
                 "left",
             )
-            .select("vertex", F.coalesce("lab", F.col("comp")).alias("comp"))
+            .select("vertex", F.coalesce("label", F.col("comp")).alias("comp"))
         )
 
     edges.unpersist()

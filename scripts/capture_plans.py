@@ -122,25 +122,12 @@ def main() -> None:
     save("bfs_output", tag, ("returned DataFrame", explain_str(bf)))
 
     # wcc round body
+    from cugraph_spark.components.connectivity import _min_label_round
+
     labels = iterloop.materialize(g.vertices_internal.select("vertex", F.col("vertex").alias("label")))
     with iterloop.small_plan(spark, n):
-        nbr_min = (
-            edges.select(SRC, DST)
-            .join(iterloop.hint_state_join(labels.select(F.col("vertex").alias(jk), "label"), n), jk)
-            .groupBy(F.col(gk).alias("vertex"))
-            .agg(F.min("label").alias("_nbr"))
-        )
-        prop = labels.join(nbr_min, "vertex", "left").select(
-            "vertex",
-            F.least(F.col("label"), F.coalesce("_nbr", F.col("label"))).alias("label"),
-            F.col("label").alias("_old"),
-        )
-        lab_min = prop.groupBy(F.col("label").alias("_lab")).agg(F.min("vertex").alias("_root"))
-        new_labels = (
-            prop.join(F.broadcast(lab_min), prop["label"] == lab_min["_lab"], "left")
-            .select("vertex", F.least(F.col("label"), F.coalesce("_root", F.col("label"))).alias("label"), "_old")
-        )
-        save("wcc_round_body", tag, ("per-round propagate+two-hop shortcut (inside small_plan)", explain_str(new_labels)))
+        new_labels = _min_label_round(edges.select(SRC, DST), labels, n, jk, gk)
+        save("wcc_round_body", tag, ("per-round min-label propagation (inside small_plan)", explain_str(new_labels)))
     wc = weakly_connected_components(g)
     save("wcc_output", tag, ("returned DataFrame", explain_str(wc)))
 

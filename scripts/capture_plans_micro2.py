@@ -45,7 +45,6 @@ def main() -> None:
     from cugraph_spark.session import get_spark
     from cugraph_spark.constants import SRC, DST
     from cugraph_spark.plans import iterloop
-    from cugraph_spark.components.connectivity import _skew_safe_hint
     import queries_registry as reg
 
     spark = get_spark("capture_plans_micro2", shuffle_partitions=8)
@@ -83,7 +82,7 @@ def main() -> None:
         own = F.struct("cp", "cid")
         new = (
             c.join(swept(nbr), "vertex", "left")
-            .join(_skew_safe_hint(jump, n_hint), F.col("cid") == F.col("_jv"), "left")
+            .join(iterloop.hint_state_join(jump, n_hint), F.col("cid") == F.col("_jv"), "left")
             .select(
                 "vertex",
                 F.greatest(own, F.coalesce("_nb", own), F.coalesce("_jc", own)).alias("_c"),

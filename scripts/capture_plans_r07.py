@@ -97,47 +97,6 @@ def main() -> None:
         title = "per-member degree = its own E-sized groupBy aggregate (per ensemble member)"
     save("ecg_member_deg", tag, (title, explain_str(member_deg)))
 
-    # ---- wcc round body (batched passes) ------------------------------------
-    import cugraph_spark.components.connectivity as conn
-
-    labels = iterloop.materialize(g.vertices_internal.select("vertex", F.col("vertex").alias("label")))
-    fs = iterloop.FusedSwap()
-
-    def prop_round(cur):
-        nbr_min = (
-            edges.join(iterloop.hint_state_join(cur.select(F.col("vertex").alias(jk), "label"), n), jk)
-            .groupBy(F.col(gk).alias("vertex"))
-            .agg(F.min("label").alias("_nbr"))
-        )
-        prop = cur.join(iterloop.hint_state_join(nbr_min, n), "vertex", "left").select(
-            "vertex",
-            F.least(F.col("label"), F.coalesce("_nbr", F.col("label"))).alias("label"),
-            F.col("label").alias("_old"),
-        )
-        lab_min = prop.groupBy(F.col("label").alias("_lab")).agg(F.min("vertex").alias("_root"))
-        lab_min = conn._skew_safe_hint(lab_min, n)
-        return prop.join(lab_min, prop["label"] == lab_min["_lab"], "left").select(
-            "vertex",
-            F.least(F.col("label"), F.coalesce("_root", F.col("label"))).alias("label"),
-            "_old",
-        )
-
-    k_passes = getattr(conn, "WCC_PASSES_PER_SYNC", 1)
-    with iterloop.small_plan(spark, n):
-        step = labels
-        for _ in range(k_passes - 1):
-            step = fs.defer(prop_round(step).select("vertex", "label"))
-        body = prop_round(step)
-        save(
-            "wcc_sync_body",
-            tag,
-            (
-                f"one swap+convergence job = {k_passes} propagation pass(es) "
-                "(inner passes leaf-swapped via defer)",
-                explain_str(body),
-            ),
-        )
-
     # ---- betweenness backward level body ------------------------------------
     from cugraph_spark.centrality import betweenness_centrality as bcmod
 
@@ -194,14 +153,9 @@ def main() -> None:
         )
         save("betweenness_backward_level", tag, (title, explain_str(lev_delta)))
 
-    # ---- vertex_coloring 'used' aggregation orientation ----------------------
-    # The decider agg of the r7 orientation A/B: collect_set partial
-    # buffers are not V-bounded, so the dst-keyed exchange carries fat
-    # set buffers while the src-keyed form stays inside the cached
-    # partitioning. Capture honors SPARK_GRAFT_COLOR_FLIP exactly like
-    # the implementation (before = run with SPARK_GRAFT_COLOR_FLIP=0).
-    flip = os.environ.get("SPARK_GRAFT_COLOR_FLIP", "1") == "1"
-    agg_k, oth_k = (SRC, DST) if flip else (DST, SRC)
+    # ---- vertex_coloring 'used' aggregation ---------------------------------
+    # collect_set partial buffers are not V-bounded; keyed on src the
+    # aggregation stays inside the cached partitioning.
     colored = iterloop.materialize(
         g.vertices_internal.select("vertex", (F.col("vertex") % 7).cast("int").alias("color"))
     )
@@ -209,21 +163,17 @@ def main() -> None:
         used = (
             edges.join(
                 iterloop.hint_state_join(
-                    colored.select(F.col("vertex").alias(oth_k), "color"), n
+                    colored.select(F.col("vertex").alias(DST), "color"), n
                 ),
-                oth_k,
+                DST,
             )
-            .groupBy(F.col(agg_k).alias("vertex"))
+            .groupBy(F.col(SRC).alias("vertex"))
             .agg(F.sort_array(F.collect_set("color")).alias("_used"))
         )
         save(
             "vertex_coloring_used_agg",
             tag,
-            (
-                f"'used' collect_set aggregation keyed on {agg_k} "
-                f"(flip={'on' if flip else 'off'})",
-                explain_str(used),
-            ),
+            ("'used' collect_set aggregation keyed on src", explain_str(used)),
         )
 
     spark.stop()

@@ -1,5 +1,7 @@
 """WCC / SCC tests (reference: tests/components/test_connectivity.py)."""
 
+import pytest
+
 from cugraph_spark import Graph, connected_components, weakly_connected_components, strongly_connected_components
 
 
@@ -32,13 +34,18 @@ def test_wcc_karate_single_component(karate):
     assert labels == {0}
 
 
-def test_wcc_long_path_converges(spark):
-    # path of 40 vertices: stresses O(log d) two-hop shortcut convergence
-    df = spark.createDataFrame([(i, i + 1) for i in range(39)], ["src", "dst"])
-    g = Graph(directed=False)
+@pytest.mark.parametrize("directed", [False, True], ids=["undirected", "directed"])
+@pytest.mark.parametrize("order", ["ascending", "descending"])
+def test_wcc_long_path_converges(spark, order, directed):
+    # path of 40 vertices: min-label propagation needs one round per hop.
+    # Directed, the min label flows along every edge (ascending) or
+    # against every edge (descending).
+    pairs = [(i, i + 1) if order == "ascending" else (i + 1, i) for i in range(39)]
+    df = spark.createDataFrame(pairs, ["src", "dst"])
+    g = Graph(directed=directed)
     g.from_edgelist(df, "src", "dst")
-    got = {r["labels"] for r in weakly_connected_components(g).collect()}
-    assert got == {0}
+    got = {r["vertex"]: r["labels"] for r in weakly_connected_components(g).collect()}
+    assert got == {v: 0 for v in range(40)}
 
 
 def test_scc(spark):

@@ -121,6 +121,23 @@ def test_mst_equal_weight_ties_cannot_cycle(spark):
         parent[a] = b
 
 
+def test_mst_long_path_merges_through_chain(spark):
+    """w(i, i+1) = i + 1: every vertex but 0 picks its lower edge, so the
+    first Borůvka round merges all 64 vertices through one 63-long chain
+    of merge pairs."""
+    import networkx as nx
+
+    rows = [(i, i + 1, float(i + 1)) for i in range(63)]
+    g = Graph(directed=False)
+    g.from_edgelist(spark.createDataFrame(rows, ["src", "dst", "weight"]), "src", "dst", weight="weight")
+    got = minimum_spanning_tree(g).edges().filter(F.col("src") < F.col("dst")).collect()
+    nxg = nx.Graph()
+    nxg.add_weighted_edges_from(rows)
+    want = nx.minimum_spanning_tree(nxg).size(weight="weight")
+    assert {(r["src"], r["dst"]) for r in got} == {(i, i + 1) for i in range(63)}
+    assert sum(r["weight"] for r in got) == pytest.approx(want)
+
+
 def test_maximum_spanning_tree(spark):
     rows = [(0, 1, 1.0), (1, 2, 5.0), (0, 2, 2.0)]
     g = Graph(directed=False)

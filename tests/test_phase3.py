@@ -237,6 +237,34 @@ def test_leiden_and_ecg(spark):
     assert rows2[0] != rows2[10] and q2 > 0.4
 
 
+def test_leiden_split_distributed_matches_union_find(spark):
+    """Leiden's refinement split: the distributed min-label branch (no
+    ``n_level_edges``) and the driver union-find branch agree. Community
+    100 holds three disconnected pieces, community 200 one path."""
+    from cugraph_spark.community.leiden import _split_disconnected
+
+    pairs = [
+        (4, 1), (1, 7), (7, 0),  # community 100, piece {0, 1, 4, 7}
+        (9, 3),  # community 100, piece {3, 9}
+        (2, 5), (5, 6), (6, 8),  # community 200, one path
+        (0, 2), (9, 6),  # cross-community edges
+    ]
+    comm = {v: 100 for v in (0, 1, 3, 4, 7, 9, 10)}
+    comm.update({v: 200 for v in (2, 5, 6, 8)})
+    g = Graph(directed=False)
+    g.from_edgelist(spark.createDataFrame(pairs, ["src", "dst"]), "src", "dst")
+    edges = g.edgelist.select("src", "dst")
+    assign = spark.createDataFrame(sorted(comm.items()), ["vertex", "community"])
+    n = len(comm)
+    dist = {r["vertex"]: r["community"] for r in _split_disconnected(edges, assign, n_hint=n).collect()}
+    local = {
+        r["vertex"]: r["community"]
+        for r in _split_disconnected(edges, assign, n_hint=n, n_level_edges=len(pairs)).collect()
+    }
+    want = {0: 0, 1: 0, 4: 0, 7: 0, 3: 3, 9: 3, 10: 10, 2: 2, 5: 2, 6: 2, 8: 2}
+    assert dist == local == want
+
+
 def test_streaming_edge_ingestion(spark, tmp_path):
     from cugraph_spark.streaming.edge_stream import (
         start_edge_stream,

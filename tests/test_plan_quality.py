@@ -273,11 +273,12 @@ def test_text_pipeline_stays_shuffle_free(spark):
 def test_swept_loop_bodies_stay_sortmerge_free(spark):
     """r6 hint-sweep pins (r6 verdict #9): the V-bounded join sides the
     r6 sweep broadcast-hinted (core_number's h-index state update,
-    louvain/leiden's contraction) must keep planning as
-    BroadcastHashJoin inside the small-plan regime — losing a hint in a
+    louvain/leiden's contraction, the shared min-label round) must keep
+    planning as BroadcastHashJoin inside the small-plan regime — losing a hint in a
     refactor silently re-introduces a per-round SortMergeJoin that
     shuffles+sorts stats-less checkpoint leaves every iteration."""
     from cugraph_spark import Graph
+    from cugraph_spark.components.connectivity import _min_label_round
     from cugraph_spark.plans import iterloop
 
     lineitem = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
@@ -311,10 +312,21 @@ def test_swept_loop_bodies_stay_sortmerge_free(spark):
             .groupBy(F.col("_cs").alias("src"), F.col("_cd").alias("dst"))
             .agg(F.count(F.lit(1)).alias("_w"))
         )
-        for name, df in (("core_number_update", upd), ("contraction", contracted)):
+        # wcc / leiden split / boruvka merge: one min-label round
+        labels = state.select("vertex", F.col("vertex").alias("label"))
+        jk, gk = ("dst", "src") if iterloop.sym_aligned_agg(g, n) else ("src", "dst")
+        min_label = _min_label_round(edges, labels, n, jk, gk)
+        for name, df in (
+            ("core_number_update", upd),
+            ("contraction", contracted),
+            ("min_label_round", min_label),
+        ):
             plan = _plan(df)
             assert "SortMergeJoin" not in plan, (name, plan)
             assert "BroadcastHashJoin" in plan, (name, plan)
+        # exactly the state and nbr_min broadcasts: a third means a dead
+        # join came back into the round
+        assert _plan(min_label).count("BroadcastExchange") == 2, _plan(min_label)
     g.edgelist.unpersist()
 
 
